@@ -58,5 +58,8 @@ def materialize(df: DataFrame, name: str = "intermediate", strategy: str | None 
     if strategy == "table":
         path = os.path.join(_table_dir(df), f"{name}-{uuid.uuid4().hex[:12]}")
         df.write.mode("overwrite").parquet(path)
-        return df.sparkSession.read.parquet(path)
+        # The frame's own schema is what inference would return for the
+        # files just written (pinned by a test); passing it skips the
+        # one-task inference job.
+        return df.sparkSession.read.schema(df.schema).parquet(path)
     raise ValueError(f"unknown materializer strategy: {strategy!r}")

@@ -18,6 +18,7 @@ from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from event_streaming_spark.session import tune_session
 
@@ -80,8 +81,46 @@ def register(name: str, oracle: str | None, tags: tuple[str, ...] = (), bench: b
     return deco
 
 
+#: Session confs that change the schema parquet inference returns.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
+#: (absolute path, *_SCHEMA_CONFS values) -> ((st_ino, st_mtime_ns,
+#: st_size), schema Spark inferred for that file).  Holds StructTypes
+#: only, never a DataFrame or a session, so it is safe across sessions;
+#: a rewritten file replaces its own entry.
+_SCHEMAS: dict[tuple[str, ...], tuple[tuple[int, int, int], StructType]] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without the one-task schema-inference
+    job on repeat reads: the first read of a file (per conf setting)
+    infers as usual; later reads of the unchanged file pass the schema
+    Spark inferred then.
+
+    The stat comes before the inference: a file rewritten in between is
+    stored under its old stamp and re-inferred on the next call, never
+    served stale.  Concurrent misses each infer and store a consistent
+    entry, so the cache needs no lock."""
+    st = os.stat(path)
+    stamp = (st.st_ino, st.st_mtime_ns, st.st_size)
+    key = (os.path.abspath(path), *(spark.conf.get(k) for k in _SCHEMA_CONFS))
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = (stamp, df.schema)
+    return df
+
+
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    """Parquet scan for one of the test tables (columnar, pushdown-capable).
+    """Parquet scan for one of the test tables (columnar, pushdown-capable;
+    the schema is inferred once per file, see ``_read_parquet``).
 
     ``events.ts`` is TIMESTAMP(NANOS) on disk; with ``nanosAsLong`` it scans
     as epoch-nanos LONG and we rebuild a (µs) timestamp via integer
@@ -89,7 +128,7 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     """
     from pyspark.sql import functions as F
 
-    df = spark.read.parquet(os.path.join(sf_dir, f"{table}.parquet"))
+    df = _read_parquet(spark, os.path.join(sf_dir, f"{table}.parquet"))
     if table == "events":
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":  # TIMESTAMP(NANOS) read via nanosAsLong

@@ -162,8 +162,10 @@ def docs_exact_substring_dedup_spans(spark: SparkSession, sf_dir: str) -> DataFr
     # max(doc_id) over the h-partition — ONE window exchange of the
     # positional table replaces the countDistinct aggregate PLUS the
     # join-back (which re-shuffled the corpus-linear sh frame by h a
-    # second time).  Same task placement per h as the join's shuffle;
-    # per-task state is one hash's postings, bounded as before.
+    # second time).  Per-task state is one hash's postings, but a window
+    # gets no AQE skew-join splitting (nor the aggregate's partial
+    # pre-aggregation): a hot h is one task, where the join probe's
+    # skewed partition could be split.
     wdup = Window.partitionBy("h")
     flagged = (
         sh.select("doc_id", "pos", "h")

@@ -183,7 +183,8 @@ def docs_prefix_filter_jaccard_join(spark: SparkSession, sf_dir: str) -> DataFra
     # corpus-linear tok frame by sh twice (once under the aggregate,
     # once as the join probe); the window pays that exchange ONCE.
     # Each sh's rows (≤ one per doc, hs is array_distinct) share a task,
-    # the same placement the join's shuffle produced.
+    # and a window gets no AQE skew-join splitting: a hot sh stays one
+    # task, where the join probe's skewed partition could be split.
     ranked = tok.withColumn(
         "dfc", F.count(F.lit(1)).over(Window.partitionBy("sh"))
     ).withColumn(

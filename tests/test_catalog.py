@@ -61,3 +61,100 @@ def test_entry_smoke(spark):
     df = e.entry(spark)
     assert df.count() > 0
     assert set(e.oracle_sql()) <= set(e.queries())
+
+
+# ---------------------------------------------------------------------------
+# load(): the schema Spark infers for a table file is reused by later loads
+# of the unchanged file, so a repeat load launches no inference job.
+
+
+def _jobs_launched(spark, group: str, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_repeat_load_launches_no_spark_job(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from event_streaming_spark.plans.catalog import load
+
+    pq.write_table(pa.table({"k": [1, 2, 3]}), str(tmp_path / "t.parquet"))
+    # a first load of a new file infers its schema with a Spark job ...
+    assert _jobs_launched(spark, "load-first", lambda: load(spark, str(tmp_path), "t"))
+    # ... a second load of the same file reuses it
+    assert _jobs_launched(spark, "load-second", lambda: load(spark, str(tmp_path), "t")) == []
+
+
+def test_load_sees_file_rewritten_in_place(spark, tmp_path):
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from event_streaming_spark.plans.catalog import load
+
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"k": [1, 2]}), path)
+    ino = os.stat(path).st_ino
+    assert load(spark, str(tmp_path), "t").dtypes == [("k", "bigint")]
+    pq.write_table(pa.table({"k": ["a", "b"], "v": [1.5, 2.5]}), path)
+    assert os.stat(path).st_ino == ino  # same file, rewritten in place
+    df = load(spark, str(tmp_path), "t")
+    assert df.dtypes == [("k", "string"), ("v", "double")]
+    assert sorted(tuple(r) for r in df.collect()) == [("a", 1.5), ("b", 2.5)]
+
+
+def test_load_follows_nanos_as_long_toggle(spark, tmp_path):
+    """events.ts stored as TIMESTAMP(NANOS) scans as epoch-nanos LONG only
+    under ``nanosAsLong``; a schema inferred under one setting must not be
+    reused under the other."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pyspark.sql import functions as F
+
+    from event_streaming_spark.plans.catalog import load
+
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    ns = np.array([1_700_000_000_123_456_789], dtype="datetime64[ns]")
+    pq.write_table(
+        pa.table({"event_id": [7], "ts": pa.array(ns, pa.timestamp("ns"))}),
+        str(tmp_path / "events.parquet"),
+    )
+    want = [(7, 1_700_000_000_123_456)]  # floor-truncated to µs
+
+    def rows(df):
+        return [tuple(r) for r in df.select("event_id", F.unix_micros("ts")).collect()]
+
+    try:
+        spark.conf.set(conf, "true")
+        df = load(spark, str(tmp_path), "events")
+        assert dict(df.dtypes)["ts"] == "timestamp"
+        assert rows(df) == want
+        spark.conf.set(conf, "false")
+        with pytest.raises(Exception, match="PARQUET_TYPE_ILLEGAL"):
+            load(spark, str(tmp_path), "events")
+        spark.conf.set(conf, "true")
+        df = load(spark, str(tmp_path), "events")
+        assert dict(df.dtypes)["ts"] == "timestamp"
+        assert rows(df) == want
+    finally:
+        spark.conf.set(conf, "true")
+
+
+def test_cached_and_uncached_events_load_agree(spark, monkeypatch):
+    from event_streaming_spark.plans import catalog
+
+    monkeypatch.setattr(catalog, "_SCHEMAS", {})
+    uncached = catalog.load(spark, SF_SMALL, "events")
+    assert len(catalog._SCHEMAS) == 1
+    cached = catalog.load(spark, SF_SMALL, "events")
+    assert cached.schema == uncached.schema
+    assert sorted(map(tuple, cached.collect())) == sorted(map(tuple, uncached.collect()))

@@ -8,6 +8,7 @@ randomized shape coverage (dup keys, empty groups, ties), not volume.
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -158,6 +159,26 @@ def test_connected_components_with_table_materializer(spark, tmp_path, monkeypat
         r["node"]: r["component"] for r in connected_components(nodes, edges).collect()
     }
     assert got == {0: 0, 1: 0, 2: 0, 3: 3, 4: 4, 5: 4, 6: 6, 7: 7}
+
+
+def test_table_materializer_read_back_schema_matches_inference(spark, tmp_path, monkeypatch):
+    # The table pin reads its files back with the frame's own schema; that
+    # must be exactly the schema Spark infers from those files.
+    from event_streaming_spark.operators.materialize import materialize
+
+    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE_DIR", str(tmp_path / "mat"))
+    df = spark.sql(
+        "SELECT id, CAST(id AS INT) AS i, CAST(id AS STRING) AS s,"
+        " CAST(id AS DECIMAL(18,6)) AS d, id / 3 AS f, id % 2 = 0 AS b,"
+        " TIMESTAMP'2024-01-01 00:00:00' + make_interval(0, 0, 0, 0, 0, 0, id) AS ts,"
+        " TIMESTAMP_NTZ'2024-01-01 00:00:00' AS ntz, DATE'2024-01-01' AS dt,"
+        " array(id, id + 1) AS arr, map('k', id) AS m, named_struct('x', id, 'y', 'z') AS st,"
+        " CAST(NULL AS STRING) AS nul, unhex('00ff') AS bin FROM range(5)"
+    )
+    pinned = materialize(df, "schema-probe", strategy="table")
+    path = os.path.join(str(tmp_path / "mat"), os.listdir(str(tmp_path / "mat"))[0])
+    assert pinned.schema == spark.read.parquet(path).schema
+    assert sorted(map(tuple, pinned.collect())) == sorted(map(tuple, df.collect()))
 
 
 def test_global_rank_primitives_match_window(spark):

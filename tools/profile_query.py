@@ -3,7 +3,9 @@ with the Spark event log on, then attribute wall time to jobs and stages
 (task time, shuffle bytes, task counts) from the log.
 
 Usage:
-  python tools/profile_query.py <query> [--reps 2]
+  python tools/profile_query.py <query> [reps]
+
+``reps`` is a bare int: warm evaluations after the cold one (default 1).
 
 Prints, per evaluation: job count, per-job wall, and the top stages by
 task time with their shuffle read/write volumes — the guide §1 "where is
