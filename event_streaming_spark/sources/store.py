@@ -23,6 +23,8 @@ import datetime as dt
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from event_streaming_spark.sources.durable import drop, ledgered_sink, recover, swap
+
 
 class EventStore:
     def __init__(
@@ -49,38 +51,20 @@ class EventStore:
         )
 
     def sink(self, stream_df: DataFrame, checkpoint: str):
-        """Streaming append via foreachBatch.
+        """Streaming append via foreachBatch, deduplicated by the batch-id
+        ledger ``<checkpoint>/store-ledger`` (sources/durable.py).
 
-        foreachBatch is at-least-once: a batch that fails after a partial
-        append is REPLAYED on restart, which would duplicate rows.  A
-        batch-id ledger (committed only after a successful append)
-        deduplicates replays of every failure mode EXCEPT the narrow
-        window between the append completing and the mark landing — a
-        crash exactly there duplicates that one batch, because plain
+        The ledger deduplicates replays of every failure mode EXCEPT the
+        narrow window between the append completing and the mark landing
+        — a crash exactly there duplicates that one batch, because plain
         partitioned parquet has no transaction to make the data and the
         mark atomic.  That residual window is why exactly-once pipelines
         use ``VersionedStore.sink`` instead: there the batch id commits
         INSIDE the data manifest (the Delta ``txn`` action), so the
         change and its dedup mark publish atomically.
         """
-        import os
-
-        ledger = os.path.join(checkpoint, "store-ledger")
-
-        def _batch(batch_df: DataFrame, batch_id: int) -> None:
-            mark = os.path.join(ledger, f"batch-{batch_id}.done")
-            if os.path.exists(mark):  # replay after post-append failure
-                return
-            self.append(batch_df)
-            os.makedirs(ledger, exist_ok=True)
-            with open(mark, "w") as fh:
-                fh.write("done")
-
-        return (
-            stream_df.writeStream.foreachBatch(_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
+        return ledgered_sink(
+            stream_df, checkpoint, "store-ledger", lambda df, _bid, _scope: self.append(df)
         )
 
     def compact(
@@ -106,14 +90,14 @@ class EventStore:
         leaves a bogus ``event_date=...`` partition value behind.  The
         only non-atomic window is between the two renames (day briefly
         absent); a crash there is repaired on the next compact() call,
-        which restores the displaced partition before doing anything else.
+        which restores the displaced partition before doing anything else
+        (``durable.swap``/``durable.recover``).
         """
         import glob
         import os
-        import shutil
 
         part, tmp, old = self._day_dirs(event_date)
-        self._recover_day(part, tmp, old)
+        recover(part, tmp, old)
         if not os.path.isdir(part):
             return 0
         day = self.spark.read.parquet(part)
@@ -135,9 +119,7 @@ class EventStore:
                 .write.mode("overwrite")
                 .parquet(tmp)
             )
-        os.rename(part, old)
-        os.rename(tmp, part)
-        shutil.rmtree(old)
+        swap(part, tmp, old)
         return len(glob.glob(os.path.join(part, "*.parquet")))
 
     def _day_dirs(self, event_date: dt.date) -> tuple[str, str, str]:
@@ -147,21 +129,6 @@ class EventStore:
         tmp = os.path.join(self.path, f"_compacting-{event_date.isoformat()}")
         old = os.path.join(self.path, f"_old-{event_date.isoformat()}")
         return part, tmp, old
-
-    @staticmethod
-    def _recover_day(part: str, tmp: str, old: str) -> None:
-        """Repair an interrupted rewrite: an interrupted swap leaves the
-        day's data in `old`; stale rewrite output in `tmp` is garbage."""
-        import os
-        import shutil
-
-        if os.path.isdir(old):
-            if os.path.isdir(part):
-                shutil.rmtree(old)  # swap completed; cleanup died
-            else:
-                os.rename(old, part)  # swap interrupted; restore the day
-        if os.path.isdir(tmp):
-            shutil.rmtree(tmp)
 
     def delete_where(self, predicate, dates: list[dt.date] | None = None) -> int:
         """Targeted row deletion (GDPR erasure / retention purge).
@@ -183,7 +150,6 @@ class EventStore:
         reference ``event_date``.  Returns the number of rows deleted.
         """
         import os
-        import shutil
 
         pred = F.expr(predicate) if isinstance(predicate, str) else predicate
         if dates is None:
@@ -198,7 +164,7 @@ class EventStore:
         deleted = 0
         for d in sorted(dates):
             part, tmp, old = self._day_dirs(d)
-            self._recover_day(part, tmp, old)
+            recover(part, tmp, old)
             if not os.path.isdir(part):
                 continue
             day = self.spark.read.parquet(part).withColumn(
@@ -216,17 +182,14 @@ class EventStore:
                 continue
             deleted += n_before - n_keep
             if n_keep == 0:  # whole day erased: drop the partition
-                os.rename(part, old)
-                shutil.rmtree(old)
+                drop(part, tmp)
                 continue
             (
                 keep.write.mode("overwrite")
                 .option("maxRecordsPerFile", self.max_records_per_file)
                 .parquet(tmp)
             )
-            os.rename(part, old)
-            os.rename(tmp, part)
-            shutil.rmtree(old)
+            swap(part, tmp, old)
         return deleted
 
     # -- reads ------------------------------------------------------------------

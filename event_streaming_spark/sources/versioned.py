@@ -39,6 +39,8 @@ import uuid
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from event_streaming_spark.sources.durable import ledgered_sink
+
 
 class CommitConflict(RuntimeError):
     pass
@@ -823,51 +825,6 @@ class VersionedStore:
             .withColumn("_change", F.lit("insert"))
         )
 
-    def _ledgered_sink(
-        self,
-        stream_df: DataFrame,
-        checkpoint: str,
-        ledger_name: str,
-        commit_batch,
-        available_now: bool = True,
-    ):
-        """Shared foreachBatch skeleton for the streaming sinks: per
-        micro-batch, skip if the checkpoint-local ledger marks the batch
-        done, else run ``commit_batch(batch_df, batch_id, txn_scope)``
-        (whose in-manifest txn token is the real idempotency record —
-        the ledger is only a fast-path cache) and write the mark.
-
-        ``available_now=False`` keeps ONE long-lived micro-batch query
-        instead of drain-and-terminate: a caller interleaving publishes
-        with derived-view maintenance synchronizes on
-        ``query.processAllAvailable()`` per wave and stops the query at
-        the end — each wave then costs zero query-startup/teardown
-        (checkpoint resolution, offset-log replay, trigger spin-up),
-        which on the continuous CDC→IVM loop was a restart per wave
-        (r12; the micro-batch engine fires no batch while no new files
-        exist, so idle periods between waves commit nothing)."""
-        ledger = os.path.join(checkpoint, ledger_name)
-        txn_scope = os.path.abspath(checkpoint)
-
-        def _batch(batch_df: DataFrame, batch_id: int) -> None:
-            mark = os.path.join(ledger, f"batch-{batch_id}.done")
-            if os.path.exists(mark):
-                return
-            v = commit_batch(batch_df, batch_id, txn_scope)
-            os.makedirs(ledger, exist_ok=True)
-            with open(mark, "w") as fh:
-                fh.write(str(v))
-
-        writer = stream_df.writeStream.foreachBatch(_batch).option(
-            "checkpointLocation", checkpoint
-        )
-        writer = (
-            writer.trigger(availableNow=True)
-            if available_now
-            else writer.trigger(processingTime="50 milliseconds")
-        )
-        return writer.start()
-
     def sink(self, stream_df: DataFrame, checkpoint: str):
         """Streaming append: each micro-batch commits ONE new version
         (atomic, so readers see batch boundaries, never partial
@@ -877,7 +834,7 @@ class VersionedStore:
         impossible by construction.  The checkpoint-local ledger is only
         a fast-path cache (and covers replays older than the manifest
         retention window)."""
-        return self._ledgered_sink(
+        return ledgered_sink(
             stream_df,
             checkpoint,
             "vstore-ledger",
@@ -897,7 +854,7 @@ class VersionedStore:
         the in-manifest ``txn`` record (ledger = fast-path cache, as in
         ``sink``).  Within one batch, the last row per key (by batch
         order) wins — dedupe upstream for a different policy."""
-        return self._ledgered_sink(
+        return ledgered_sink(
             stream_df,
             checkpoint,
             "vstore-upsert-ledger",

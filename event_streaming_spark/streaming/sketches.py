@@ -14,12 +14,12 @@ atomic rename — the published directory itself IS the idempotency mark,
 so there is no window where the append landed but the mark did not (a
 crash there would have made replays double-append: harmless for HLL —
 max is idempotent — but it would inflate Count-Min counts).  The
-checkpoint-local ledger file remains as a fast-path skip only.
+checkpoint-local ledger file remains as a fast-path skip only.  Both
+the publish and the crash-recoverable ``compact()`` swap are the shared
+protocols in ``sources/durable.py``.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,6 +32,12 @@ from event_streaming_spark.operators.sketches import (
     hll_registers,
     hll_registers_by,
 )
+from event_streaming_spark.sources.durable import log_sink, recover, swap
+
+
+def _compact_dirs(path: str) -> tuple[str, str, str]:
+    """(live, staged, displaced) for a log's compaction swap."""
+    return path, path + "._compacting", path + "._old"
 
 
 class HllStreamingSketch:
@@ -55,54 +61,19 @@ class HllStreamingSketch:
         self.group_cols = list(group_cols or [])
 
     def sink(self, stream_df: DataFrame, checkpoint: str):
-        ledger = os.path.join(checkpoint, "hll-ledger")
-
-        def _batch(batch_df: DataFrame, batch_id: int) -> None:
-            mark = os.path.join(ledger, f"batch-{batch_id}.done")
-            if os.path.exists(mark):
-                return
-            target = os.path.join(self.path, f"batch-{batch_id}")
-            if not os.path.isdir(target):  # publish = atomic rename = mark
-                if self.group_cols:
-                    regs = hll_registers_by(
-                        batch_df, self.group_cols, F.col(self.key_col), self.b
-                    )
-                else:
-                    regs = hll_registers(batch_df, F.col(self.key_col), self.b)
-                os.makedirs(self.path, exist_ok=True)
-                # dot-prefixed staging is invisible to Spark's file lister;
-                # overwrite clears any partial output a crashed run left
-                tmp = os.path.join(self.path, f"._staging-batch-{batch_id}")
-                regs.write.mode("overwrite").parquet(tmp)
-                os.rename(tmp, target)
-            os.makedirs(ledger, exist_ok=True)
-            with open(mark, "w") as fh:
-                fh.write("done")
-
-        return (
-            stream_df.writeStream.foreachBatch(_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
+        return log_sink(
+            stream_df, checkpoint, "hll-ledger", self.path, self._batch_registers
         )
 
-    def _recover(self) -> None:
-        """Repair an interrupted compact(): data displaced to ``._old``
-        with the live path missing → restore it; stale ``._compacting``
-        output is garbage either way."""
-        import shutil
-
-        bak, tmp = self.path + "._old", self.path + "._compacting"
-        if os.path.isdir(bak):
-            if os.path.isdir(self.path):
-                shutil.rmtree(bak)
-            else:
-                os.rename(bak, self.path)
-        if os.path.isdir(tmp):
-            shutil.rmtree(tmp)
+    def _batch_registers(self, batch_df: DataFrame) -> DataFrame:
+        if self.group_cols:
+            return hll_registers_by(
+                batch_df, self.group_cols, F.col(self.key_col), self.b
+            )
+        return hll_registers(batch_df, F.col(self.key_col), self.b)
 
     def registers(self) -> DataFrame:
-        self._recover()
+        recover(*_compact_dirs(self.path))
         # per-batch subdirs + compacted top-level files in one listing
         raw = self.spark.read.option("recursiveFileLookup", "true").parquet(self.path)
         if self.group_cols:
@@ -125,20 +96,15 @@ class HllStreamingSketch:
     def compact(self) -> None:
         """Fold the append-only log back to ≤ m rows (optional hygiene;
         estimates are identical before and after).  Crash-recoverable:
-        an interrupted swap is repaired on the next read (``_recover``).
+        an interrupted swap is repaired on the next read (``recover``).
         Run only while no stream is writing this log: compaction erases
         the per-batch publish dirs that deduplicate replays, so a batch
         whose stream died between publish and ledger mark could re-append
         after a compact (harmless for HLL's max-merge, but the rule is
         shared with the Count-Min log where it would inflate counts)."""
-        tmp = self.path + "._compacting"
+        live, tmp, old = _compact_dirs(self.path)
         self.registers().coalesce(1).write.mode("overwrite").parquet(tmp)
-        final, bak = self.path, self.path + "._old"
-        os.rename(final, bak)
-        os.rename(tmp, final)
-        import shutil
-
-        shutil.rmtree(bak)
+        swap(live, tmp, old)
 
 
 class CountMinStreamingSketch:
@@ -160,30 +126,12 @@ class CountMinStreamingSketch:
     def sink(self, stream_df: DataFrame, checkpoint: str):
         from event_streaming_spark.operators.sketches import count_min_table
 
-        ledger = os.path.join(checkpoint, "cm-ledger")
-
-        def _batch(batch_df: DataFrame, batch_id: int) -> None:
-            mark = os.path.join(ledger, f"batch-{batch_id}.done")
-            if os.path.exists(mark):
-                return
-            target = os.path.join(self.path, f"batch-{batch_id}")
-            if not os.path.isdir(target):  # publish = atomic rename = mark
-                cm = count_min_table(
-                    batch_df, F.col(self.key_col), self.depth, self.width
-                )
-                os.makedirs(self.path, exist_ok=True)
-                tmp = os.path.join(self.path, f"._staging-batch-{batch_id}")
-                cm.write.mode("overwrite").parquet(tmp)
-                os.rename(tmp, target)
-            os.makedirs(ledger, exist_ok=True)
-            with open(mark, "w") as fh:
-                fh.write("done")
-
-        return (
-            stream_df.writeStream.foreachBatch(_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
+        return log_sink(
+            stream_df,
+            checkpoint,
+            "cm-ledger",
+            self.path,
+            lambda df: count_min_table(df, F.col(self.key_col), self.depth, self.width),
         )
 
     def table(self) -> DataFrame:
@@ -236,31 +184,13 @@ class ThetaStreamingSketch:
         return df.select(h.alias("h")).distinct().orderBy("h").limit(self.k)
 
     def sink(self, stream_df: DataFrame, checkpoint: str):
-        ledger = os.path.join(checkpoint, "theta-ledger")
-
-        def _batch(batch_df: DataFrame, batch_id: int) -> None:
-            mark = os.path.join(ledger, f"batch-{batch_id}.done")
-            if os.path.exists(mark):
-                return
-            target = os.path.join(self.path, f"batch-{batch_id}")
-            if not os.path.isdir(target):
-                os.makedirs(self.path, exist_ok=True)
-                tmp = os.path.join(self.path, f"._staging-batch-{batch_id}")
-                self._hashes(batch_df).write.mode("overwrite").parquet(tmp)
-                os.rename(tmp, target)
-            os.makedirs(ledger, exist_ok=True)
-            with open(mark, "w") as fh:
-                fh.write("done")
-
-        return (
-            stream_df.writeStream.foreachBatch(_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
+        return log_sink(
+            stream_df, checkpoint, "theta-ledger", self.path, self._hashes
         )
 
     def hashes(self) -> DataFrame:
         """Merged sketch: the k smallest distinct hashes across batches."""
+        recover(*_compact_dirs(self.path))
         raw = self.spark.read.option("recursiveFileLookup", "true").parquet(self.path)
         return raw.distinct().orderBy("h").limit(self.k)
 
@@ -301,11 +231,6 @@ class ThetaStreamingSketch:
         """Fold the per-batch log to ≤ k rows (estimates unchanged).
         Same crash-repair contract as the HLL log; run only while no
         stream is writing."""
-        import shutil
-
-        tmp = self.path + "._compacting"
+        live, tmp, old = _compact_dirs(self.path)
         self.hashes().coalesce(1).write.mode("overwrite").parquet(tmp)
-        final, bak = self.path, self.path + "._old"
-        os.rename(final, bak)
-        os.rename(tmp, final)
-        shutil.rmtree(bak)
+        swap(live, tmp, old)

@@ -113,15 +113,17 @@ def test_event_store_sink_idempotent_on_replay(agency, spark, tmp_path):
     q.awaitTermination()
     assert store.read().count() == 2
 
-    # simulate the engine replaying batch 0 after a post-append crash
+    # simulate a crash after the append and its ledger mark but before
+    # Spark committed batch 0: with commits/0 gone, the restarted query
+    # hands batch 0 back, and only the ledger keeps it from re-appending
     import os
-    batch_df = store.read().drop("event_date")
     ledger_mark = os.path.join(ckpt, "store-ledger", "batch-0.done")
     assert os.path.exists(ledger_mark)
-    # directly re-invoke the batch function path: a second sink run over the
-    # same checkpoint must see no new data AND not re-append old batches
+    for f in ("0", ".0.crc"):  # the local checksum file goes with it
+        os.remove(os.path.join(ckpt, "commits", f))
     q2 = store.sink(ctx.stream(), checkpoint=ckpt)
     q2.awaitTermination()
+    assert os.path.exists(os.path.join(ckpt, "commits", "0"))  # batch 0 re-ran
     assert store.read().count() == 2  # unchanged
 
 

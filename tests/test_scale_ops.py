@@ -6,6 +6,7 @@ differential-tested against DuckDB by tests/test_catalog.py.)
 
 from __future__ import annotations
 
+import os
 import random
 
 import pyarrow.parquet as pq
@@ -346,18 +347,6 @@ def test_streaming_hll_equals_batch_hll(spark, tmp_path):
     q2.awaitTermination(120)
     assert log_rows() == n_log
 
-    # replay with the LEDGER lost (crash between publish and mark): the
-    # published batch dirs themselves dedupe — still no growth
-    import shutil as _sh
-
-    _sh.rmtree(str(tmp_path / "ckpt"))
-    q3 = sk.sink(
-        spark.readStream.schema("k long").option("maxFilesPerTrigger", 1).parquet(src),
-        str(tmp_path / "ckpt"),
-    )
-    q3.awaitTermination(120)
-    assert log_rows() == n_log
-
     # compaction folds the log without changing the estimate
     sk.compact()
     assert log_rows() <= 64
@@ -433,30 +422,85 @@ def test_hll_ignores_consistency_with_duckdb_on_null_keys(spark, duck):
     assert spark_est == duck_est
 
 
-def test_streaming_hll_compact_crash_recovery(spark, tmp_path):
+def _streaming_sketch(kind, spark, path):
+    from event_streaming_spark.streaming.sketches import (
+        CountMinStreamingSketch,
+        HllStreamingSketch,
+        ThetaStreamingSketch,
+    )
+
+    cls = {
+        "hll": HllStreamingSketch,
+        "cm": CountMinStreamingSketch,
+        "theta": ThetaStreamingSketch,
+    }[kind]
+    return cls(spark, path, "k")
+
+
+@pytest.mark.parametrize("kind", ["hll", "cm", "theta"])
+def test_streaming_sketch_replay_with_lost_ledger_does_not_grow_log(spark, tmp_path, kind):
+    """Replay with the LEDGER lost (crash between publish and mark): the
+    published batch dirs themselves dedupe, so the log gains no rows.
+    Log rows are counted, not estimates: HLL's max merge and Theta's
+    distinct merge would hide a double append from estimate()."""
+    import shutil as _sh
+
+    src = str(tmp_path / "src")
+    full = spark.range(3000).select((F.col("id") * 7919 % 100000).alias("k"))
+    for i in range(3):
+        full.filter(F.col("id") % 3 == i).coalesce(1).write.mode("append").parquet(src)
+    sk = _streaming_sketch(kind, spark, str(tmp_path / "log"))
+    ckpt = str(tmp_path / "ckpt")
+
+    def run():
+        q = sk.sink(
+            spark.readStream.schema("k long").option("maxFilesPerTrigger", 1).parquet(src),
+            ckpt,
+        )
+        q.awaitTermination(120)
+
+    def log_rows():
+        return spark.read.option("recursiveFileLookup", "true").parquet(sk.path).count()
+
+    run()
+    n_log = log_rows()
+    assert n_log > 0
+    assert sorted(d for d in os.listdir(sk.path) if d.startswith("batch-")) == [
+        "batch-0", "batch-1", "batch-2",
+    ]
+    _sh.rmtree(ckpt)  # ledger gone; batch ids 0-2 replay from scratch
+    run()
+    assert log_rows() == n_log
+
+
+@pytest.mark.parametrize("kind", ["hll", "theta"])
+def test_streaming_hll_compact_crash_recovery(spark, tmp_path, kind):
     import os as _os
     import shutil as _shutil
 
-    from event_streaming_spark.streaming.sketches import HllStreamingSketch
-
-    sk = HllStreamingSketch(spark, str(tmp_path / "regs"), "k")
-    # seed the register log directly (no stream needed for this test)
     from event_streaming_spark.operators.sketches import hll_registers
     from pyspark.sql import functions as _F
 
-    hll_registers(spark.range(5000).select(_F.col("id").alias("k")), _F.col("k")).write.mode(
-        "append"
-    ).parquet(sk.path)
+    sk = _streaming_sketch(kind, spark, str(tmp_path / "regs"))
+    # seed the log directly (no stream needed for this test)
+    keys = spark.range(5000).select(_F.col("id").alias("k"))
+    rows = hll_registers(keys, _F.col("k")) if kind == "hll" else sk._hashes(keys)
+    rows.write.mode("append").parquet(sk.path)
     est = sk.estimate()
     # simulate a crash between compact()'s two renames: live path moved
     # to ._old, replacement never landed
     _os.rename(sk.path, sk.path + "._old")
     assert not _os.path.isdir(sk.path)
-    assert sk.estimate() == est  # _recover restored the log
+    assert sk.estimate() == est  # recover restored the log
     # stale ._compacting garbage is swept as well
     _shutil.copytree(sk.path, sk.path + "._compacting")
     assert sk.estimate() == est
     assert not _os.path.isdir(sk.path + "._compacting")
+    # a swap whose cleanup died leaves ._old next to the live log
+    _shutil.copytree(sk.path, sk.path + "._old")
+    sk.compact()
+    assert not _os.path.isdir(sk.path + "._old")
+    assert sk.estimate() == est
 
 
 def test_streaming_grouped_hll_windowed_distinct(spark, tmp_path):

@@ -5,6 +5,7 @@ from __future__ import annotations
 import datetime as dt
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from event_streaming_spark.functions.auth import claims_udf, mint_hs256, verify_hs256
@@ -400,6 +401,33 @@ def test_store_compaction_crash_recovery(spark, tmp_path):
     assert after == 1
     assert store.read_key("event_date", "2024-01-05").count() == n
     assert not os.path.exists(old) and not os.path.exists(tmp)
+
+
+def test_store_delete_day_crash_mid_drop_stays_deleted(spark, tmp_path, monkeypatch):
+    """delete_where erasing a whole day must not resurrect part of it when
+    the process dies halfway through deleting the day's files: the next
+    call finishes the drop instead of restoring what was left."""
+    import shutil
+
+    store = EventStore(spark, str(tmp_path / "dstore"))
+    day = load(spark, SF_SMALL, "events").filter(F.to_date("ts") == "2024-01-05")
+    store.append(day)
+    store.append(day)  # second append -> the day holds several files
+
+    def dies_midway(path, *a, **kw):
+        victim = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))[0]
+        os.remove(os.path.join(path, victim))
+        raise OSError("simulated crash while deleting the day")
+
+    with monkeypatch.context() as m:
+        m.setattr(shutil, "rmtree", dies_midway)
+        with pytest.raises(OSError):
+            store.delete_where("event_date = DATE'2024-01-05'", dates=[dt.date(2024, 1, 5)])
+
+    assert store.compact(dt.date(2024, 1, 5)) == 0  # repaired; no day to compact
+    assert not any(
+        f.startswith(("event_date=", "_old-", "_compacting-")) for f in os.listdir(store.path)
+    )
 
 
 def test_streaming_metrics_listener(spark, tmp_path):

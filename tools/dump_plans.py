@@ -1,4 +1,12 @@
-"""Dump `.explain("formatted")` for every bench-tagged query → EXPLAINS.md.
+"""Dump `.explain("formatted")` of catalog queries.
+
+Usage:
+  python tools/dump_plans.py [sf_dir]
+      every bench-tagged query plus the session additions → EXPLAINS.md
+  python tools/dump_plans.py --out <dir> <sf_dir> <suffix> <query> [...]
+      the named queries → <dir>/<query>_<suffix>.txt, e.g.
+      ``--out plans/r12 <sf_dir> before q21_suppliers_kept_waiting`` for an
+      optimization's before/after plan evidence
 
 An inspectable artifact of the physical plans: pushed filters, pruned
 read schemas, join strategies, exchange placement — reviewable without
@@ -9,6 +17,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
 import sys
 
 sys.path.insert(0, "/root/repo")
@@ -17,7 +26,31 @@ from event_streaming_spark.plans import REGISTRY  # noqa: E402
 from event_streaming_spark.session import get_spark  # noqa: E402
 
 
+def _explain(df) -> str:
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
+def dump_named(out_dir: str, sf: str, suffix: str, names: list[str]) -> None:
+    os.makedirs(out_dir, exist_ok=True)
+    spark = get_spark(app_name=f"dump-plans-{suffix}")
+    spark.sparkContext.setLogLevel("ERROR")
+    for name in names:
+        plan = _explain(REGISTRY[name].fn(spark, sf))
+        path = os.path.join(out_dir, f"{name}_{suffix}.txt")
+        with open(path, "w") as fh:
+            fh.write(f"# {name} — explain('formatted'), {suffix} (sf dir: {sf})\n\n")
+            fh.write(plan)
+        print("wrote", path, file=sys.stderr)
+    spark.stop()
+
+
 def main() -> None:
+    if sys.argv[1:2] == ["--out"]:
+        out_dir, sf, suffix, *names = sys.argv[2:]
+        return dump_named(out_dir, sf, suffix, names)
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     spark = get_spark(app_name="dump-plans")
     spark.sparkContext.setLogLevel("ERROR")
@@ -33,11 +66,7 @@ def main() -> None:
     for name, q in REGISTRY.items():
         if not q.bench:
             continue
-        df = q.fn(spark, sf)
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        out.append(f"## {name}\n\n```\n{buf.getvalue().strip()}\n```\n")
+        out.append(f"## {name}\n\n```\n{_explain(q.fn(spark, sf)).strip()}\n```\n")
 
     # ---- non-bench session additions (VERDICT r6 #3) -----------------------
     # Queries that LOCALIZE their result (streaming drains, tempdir-backed
@@ -208,10 +237,7 @@ def main() -> None:
                 out.append(f"## {label}\n\n```\n{plan}\n```\n")
                 captured_all[label] = plan
         else:
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                df.explain("formatted")
-            plan = buf.getvalue().strip()
+            plan = _explain(df).strip()
             out.append(f"## {name}\n\n```\n{plan}\n```\n")
             captured_all[name] = plan
 
